@@ -12,7 +12,8 @@ Design: a suite compiles to ONE conditional-count aggregation — a
 single pass / single partial+final agg regardless of how many
 expectations it contains, versus the reference's one-SELECT-per-check
 round-trips. ``run_suite`` returns a tidy report DataFrame; ``enforce``
-raises on the first failure (the task-abort behavior).
+raises listing every failure (the task-abort behavior) and otherwise
+returns the row count the same pass computed.
 """
 
 from __future__ import annotations
@@ -75,10 +76,9 @@ def expect_schema(df: DataFrame, expected: dict[str, str]) -> None:
                            f"{ {k: actual.get(k) for k in missing} }")
 
 
-def run_suite(df: DataFrame, expectations: list) -> DataFrame:
-    """Evaluate all row-level expectations in one aggregation pass;
-    uniqueness expectations add one distinct-count each (unavoidable
-    extra shuffle, still one job). Returns (check, n_failed, passed)."""
+def _suite_agg(df: DataFrame, expectations: list) -> tuple[DataFrame, list[str]]:
+    """The suite as ONE wide aggregation row: ``__total`` plus one
+    failing-row count per expectation (named by the expectation)."""
     row_exps = [e for e in expectations if isinstance(e, Expectation)]
     uniq_exps = [e for e in expectations if isinstance(e, UniqueExpectation)]
     aggs = [F.count(F.lit(1)).alias("__total")]
@@ -93,8 +93,14 @@ def run_suite(df: DataFrame, expectations: list) -> DataFrame:
         # duplicates); wrapping in a struct keeps them countable.
         key = F.struct(*[F.col(c) for c in e.cols])
         aggs.append((F.count(F.lit(1)) - F.count_distinct(key)).alias(e.name))
-    wide = df.agg(*aggs)
-    names = [e.name for e in row_exps + uniq_exps]
+    return df.agg(*aggs), [e.name for e in row_exps + uniq_exps]
+
+
+def run_suite(df: DataFrame, expectations: list) -> DataFrame:
+    """Evaluate all row-level expectations in one aggregation pass;
+    uniqueness expectations add one distinct-count each (unavoidable
+    extra shuffle, still one job). Returns (check, n_failed, passed)."""
+    wide, names = _suite_agg(df, expectations)
     stacked = wide.selectExpr(
         "stack({n}, {pairs}) as (check, n_failed)".format(
             n=len(names), pairs=", ".join(f"'{n}', {n}" for n in names)
@@ -103,21 +109,31 @@ def run_suite(df: DataFrame, expectations: list) -> DataFrame:
     return stacked.withColumn("passed", F.col("n_failed") == 0)
 
 
-def enforce(df: DataFrame, expectations: list) -> None:
-    """Task-abort behavior: raise CheckFailure listing every failed check."""
-    report = run_suite(df, expectations).filter(~F.col("passed")).collect()
-    if report:
-        raise CheckFailure(
-            "; ".join(f"{r['check']}: {r['n_failed']} failing rows" for r in report)
-        )
+def enforce(df: DataFrame, expectations: list) -> int:
+    """Task-abort behavior: raise CheckFailure listing every failed check.
+    Returns the row count the suite's aggregation already computed, so a
+    caller's row-count gates need no further pass over ``df``."""
+    wide, names = _suite_agg(df, expectations)
+    row = wide.collect()[0]
+    # a sum over zero rows is NULL: an empty frame fails no expectation
+    failed = [(n, row[n]) for n in names if row[n]]
+    if failed:
+        raise CheckFailure("; ".join(f"{n}: {k} failing rows" for n, k in failed))
+    return row["__total"]
 
 
 def reconcile(src: DataFrame, dst: DataFrame, raise_on_mismatch: bool = True) -> tuple[int, int]:
     """Cross-system row-count reconciliation (`…optimized.py:996-1046`)."""
     a, b = src.count(), dst.count()
-    if raise_on_mismatch and a != b:
-        raise CheckFailure(f"count reconciliation failed: src={a} dst={b}")
+    if raise_on_mismatch:
+        reconcile_counts(a, b)
     return a, b
+
+
+def reconcile_counts(src_rows: int, dst_rows: int) -> None:
+    """:func:`reconcile` over counts the caller already holds."""
+    if src_rows != dst_rows:
+        raise CheckFailure(f"count reconciliation failed: src={src_rows} dst={dst_rows}")
 
 
 _GE_TYPE_MAP = {

@@ -26,28 +26,15 @@ def build_dag():  # pragma: no cover - requires airflow at runtime
     LAKE = "s3a://crypto-lake"
 
     def _extract(**ctx):
-        # production: sources.rest.fetch_to_dataframe with a requests-backed
-        # fetcher; records land in Bronze via run_pipeline
+        # production: sources.rest.fetch_records with a requests-backed
+        # fetcher; records land in Bronze via medallion.bronze_write
         raise NotImplementedError("inject a fetcher (see sources.rest)")
 
     def _silver(ds: str, **ctx):
-        spark = get_spark("silver-build")
-        bronze = medallion.bronze_read(spark, LAKE, ds)
-        medallion.silver_write(medallion.silver_transform(bronze), LAKE, ds)
+        medallion.bronze_to_silver(get_spark("silver-build"), LAKE, ds)
 
     def _gold(ds: str, **ctx):
-        import os
-
-        from pyspark.sql import functions as F
-
-        from airflow_crypto_etl_spark.sinks import writers
-
-        spark = get_spark("gold-build")
-        silver = (
-            spark.read.parquet(os.path.join(LAKE, "silver", "coins")).filter(F.col("dt") == ds)
-        )
-        gold = medallion.gold_build(silver.drop("dt"), ds)
-        writers.write_partitioned(gold, os.path.join(LAKE, "gold", "coins_daily"), ["dt"])
+        medallion.silver_to_gold(get_spark("gold-build"), LAKE, ds)
 
     with DAG(
         "coin_medallion_spark",

@@ -18,6 +18,12 @@ only through the lake/warehouse plus small ctx entries — so the same
 callables run under Airflow's PythonOperator, a cron script, or a
 test loop unchanged (``TASKS`` is the ordered chain).
 
+Per-``ds`` cost (see ``medallion``): ``extract`` and ``upload_raw`` run
+no Spark job — the records stay on the driver and Bronze is written
+from there; every Silver/Gold read is ``medallion.read_layer``, one
+``dt=<ds>`` partition under the layer's declared schema, never the
+table root. A day of the 14 tasks runs ≤ 26 Spark jobs.
+
 Airflow itself stays optional: :func:`build_dag` (see
 ``airflow_dag_example``) wraps these same callables when a scheduler
 is present.
@@ -25,16 +31,19 @@ is present.
 
 from __future__ import annotations
 
-import os
 from datetime import datetime, time, timedelta, timezone
 
 from pyspark.sql import functions as F
 
 from .. import checks
-from ..sinks import writers
-from ..sinks.jdbc_upsert import append_jdbc, execute_jdbc_statement, merge_upsert_jdbc
+from ..sinks.jdbc_upsert import (
+    append_jdbc,
+    create_missing_tables,
+    execute_jdbc_statement,
+    merge_upsert_jdbc,
+)
 from ..sources.jdbc import read_jdbc
-from ..sources.rest import FIXTURE_PATH, fetch_to_dataframe, fixture_fetcher
+from ..sources.rest import FIXTURE_PATH, fetch_records, fixture_fetcher
 from . import medallion
 
 DERBY_DRIVER = "org.apache.derby.jdbc.EmbeddedDriver"
@@ -42,8 +51,10 @@ DERBY_DRIVER = "org.apache.derby.jdbc.EmbeddedDriver"
 
 def create_tables(ctx: dict) -> None:
     """Stage 1 — serving-layer DDL (reference: SQLAlchemy create_all).
-    Idempotent: existing tables are left in place (re-runs are the DAG
-    norm)."""
+    Idempotent: one connection creates only the tables its metadata
+    lacks; existing tables are left in place (re-runs are the DAG norm)
+    and keep their DDL — a warehouse created before ``gold_coins_daily``
+    declared its primary key stays without it."""
     ddl = {
         "dim_coin": (
             "CREATE TABLE dim_coin ("
@@ -57,56 +68,42 @@ def create_tables(ctx: dict) -> None:
         ),
         "gold_coins_daily": (
             "CREATE TABLE gold_coins_daily ("
-            '"coin_id" VARCHAR(64), "dt" VARCHAR(10), '
+            '"coin_id" VARCHAR(64) NOT NULL, "dt" VARCHAR(10) NOT NULL, '
             '"avg_price_usd" DOUBLE, "min_price_usd" DOUBLE, '
-            '"max_price_usd" DOUBLE, "avg_market_cap" DOUBLE)'
+            '"max_price_usd" DOUBLE, "avg_market_cap" DOUBLE, '
+            # the upsert's conflict target (the reference's ON CONFLICT
+            # (coin_id, dt)): without an index on it, each day's MERGE
+            # scans the whole table
+            'PRIMARY KEY ("coin_id", "dt"))'
         ),
     }
-    for table, stmt in ddl.items():
-        try:
-            execute_jdbc_statement(ctx["spark"], ctx["warehouse_url"], stmt)
-        except Exception as exc:  # Derby: "already exists" = X0Y32
-            if "X0Y32" not in str(exc) and "already exists" not in str(exc):
-                raise
+    create_missing_tables(ctx["spark"], ctx["warehouse_url"], ddl)
 
 
 def extract(ctx: dict) -> None:
-    """Stage 2 — S1: paged REST extract through the custom DataSource
-    (fixture-backed in this environment; a requests fetcher in prod)."""
-    raw = fetch_to_dataframe(
-        ctx["spark"],
-        fetcher=fixture_fetcher(ctx.get("fixture_path", FIXTURE_PATH)),
-        pages=ctx.get("pages", 1),
+    """Stage 2 — S1: paged REST extract, driver-side (fixture-backed in
+    this environment; a requests fetcher in prod). The schema-typed
+    records stay on the driver for ``upload_raw``: no Spark job."""
+    ctx["records"] = fetch_records(
+        fixture_fetcher(ctx.get("fixture_path", FIXTURE_PATH)), pages=ctx.get("pages", 1)
     )
-    ctx["records"] = [r.asDict() for r in raw.collect()]
 
 
 def upload_raw(ctx: dict) -> None:
     """Stage 3 — K2: verbatim Bronze JSON, dt-partitioned (the
-    reference's upload_raw_to_s3; lake_root plays the bucket)."""
-    bronze = medallion.bronze_ingest(ctx["spark"], ctx["records"])
-    (
-        bronze.withColumn("dt", F.lit(ctx["ds"]))
-        .write.mode("overwrite")
-        .partitionBy("dt")
-        .json(os.path.join(ctx["lake_root"], "bronze", "coins"))
-    )
+    reference's upload_raw_to_s3; lake_root plays the bucket), written
+    from the driver."""
+    medallion.bronze_write(ctx["spark"], ctx["records"], ctx["lake_root"], ctx["ds"])
 
 
 def transform_bronze_to_silver(ctx: dict) -> None:
     """Stage 4 — the Silver contract transform + partitioned write,
-    reading ONLY this ds's Bronze partition (partition pruning)."""
-    bronze = medallion.bronze_read(ctx["spark"], ctx["lake_root"], ctx["ds"])
-    silver = medallion.silver_transform(bronze.drop("dt"))
-    ctx["silver_sidecar"] = medallion.silver_write(silver, ctx["lake_root"], ctx["ds"])
+    reading ONLY this ds's Bronze partition."""
+    ctx["silver_sidecar"] = medallion.bronze_to_silver(ctx["spark"], ctx["lake_root"], ctx["ds"])
 
 
 def _silver(ctx: dict):
-    return (
-        ctx["spark"]
-        .read.parquet(os.path.join(ctx["lake_root"], "silver", "coins"))
-        .filter(F.col("dt") == ctx["ds"])
-    )
+    return medallion.read_layer(ctx["spark"], ctx["lake_root"], "silver", ctx["ds"])
 
 
 def validate(ctx: dict) -> None:
@@ -159,18 +156,11 @@ def load_fact(ctx: dict) -> None:
 def build_gold(ctx: dict) -> None:
     """Stage 8 — A1: the Gold daily rollup, written dt-partitioned to
     the lake (the reference's build_gold_minio)."""
-    gold = medallion.gold_build(_silver(ctx).drop("dt"), ctx["ds"])
-    writers.write_partitioned(
-        gold, os.path.join(ctx["lake_root"], "gold", "coins_daily"), ["dt"]
-    )
+    medallion.silver_to_gold(ctx["spark"], ctx["lake_root"], ctx["ds"])
 
 
 def _gold(ctx: dict):
-    return (
-        ctx["spark"]
-        .read.parquet(os.path.join(ctx["lake_root"], "gold", "coins_daily"))
-        .filter(F.col("dt") == ctx["ds"])
-    )
+    return medallion.read_layer(ctx["spark"], ctx["lake_root"], "gold", ctx["ds"])
 
 
 def load_gold_warehouse(ctx: dict) -> None:

@@ -29,6 +29,7 @@ from __future__ import annotations
 
 import re
 from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, Row
 
@@ -137,20 +138,49 @@ def build_merge_sql(
     )
 
 
-def execute_jdbc_statement(spark, url: str, sql: str) -> int:
-    """Run one DDL/DML statement over a driver-side JDBC connection
-    (the Spark JVM already holds the JDBC driver — same classpath the
-    reader/writer use). Returns the update count."""
-    jvm = spark.sparkContext._jvm
-    conn = jvm.java.sql.DriverManager.getConnection(url)
+@contextmanager
+def _driver_connection(spark, url: str):
+    """A driver-side JDBC connection (the Spark JVM already holds the
+    JDBC driver — same classpath the reader/writer use), closed on exit."""
+    conn = spark.sparkContext._jvm.java.sql.DriverManager.getConnection(url)
     try:
-        st = conn.createStatement()
-        try:
-            return st.executeUpdate(sql)
-        finally:
-            st.close()
+        yield conn
     finally:
         conn.close()
+
+
+def _execute(conn, sql: str) -> int:
+    st = conn.createStatement()
+    try:
+        return st.executeUpdate(sql)
+    finally:
+        st.close()
+
+
+def execute_jdbc_statement(spark, url: str, sql: str) -> int:
+    """Run one DDL/DML statement over a driver-side JDBC connection.
+    Returns the update count."""
+    with _driver_connection(spark, url) as conn:
+        return _execute(conn, sql)
+
+
+def create_missing_tables(spark, url: str, ddl: dict[str, str]) -> None:
+    """Run the ``CREATE TABLE`` statement of each table in ``ddl``
+    (table name -> statement) that the connection's current schema does
+    not list in ``DatabaseMetaData.getTables``, over one driver-side
+    connection. Existing tables are left as they are."""
+    with _driver_connection(spark, url) as conn:
+        rs = conn.getMetaData().getTables(None, conn.getSchema(), None, None)
+        existing = set()
+        try:
+            while rs.next():
+                # unquoted identifiers fold to one case, which differs by database
+                existing.add(rs.getString("TABLE_NAME").lower())
+        finally:
+            rs.close()
+        for table, stmt in ddl.items():
+            if table.lower() not in existing:
+                _execute(conn, stmt)
 
 
 def merge_upsert_jdbc(

@@ -43,6 +43,15 @@ def write_partitioned(
     df.write.mode(mode).partitionBy(*partition_cols).format(fmt).save(path)
 
 
+def write_counted(df: DataFrame, path: str, partition_cols: list[str]) -> int:
+    """:func:`write_partitioned`, returning the rows written. The count
+    is captured via an Observation during the write itself — zero extra
+    passes."""
+    obs = Observation("rows_written")
+    write_partitioned(df.observe(obs, F.count(F.lit(1)).alias("rows")), path, partition_cols)
+    return obs.get["rows"]
+
+
 def write_with_sidecar(
     df: DataFrame,
     path: str,
@@ -53,16 +62,13 @@ def write_with_sidecar(
 ) -> dict:
     """K3+K5 — partitioned write plus the reference's `_metadata.json`
     sidecar {dataset, schema_version, execution_date, row_count, source,
-    created_at} (`…optimized.py:459-477`). The row count is captured via
-    an Observation during the write itself — zero extra passes."""
-    obs = Observation("sidecar")
-    observed = df.observe(obs, F.count(F.lit(1)).alias("row_count"))
-    write_partitioned(observed, path, partition_cols)
+    created_at} (`…optimized.py:459-477`). The row count comes from
+    :func:`write_counted`."""
     meta = {
         "dataset": dataset,
         "schema_version": SCHEMA_VERSION,
         "execution_date": ds,
-        "row_count": obs.get["row_count"],
+        "row_count": write_counted(df, path, partition_cols),
         "source": source,
         "created_at": datetime.now(timezone.utc).isoformat(),
         "columns": [f.name for f in df.schema.fields],

@@ -4,8 +4,9 @@ The reference extracts from CoinGecko `/coins/markets` driver-side with
 ``requests`` (`/root/reference/dags/coin_data_pipeline_optimized.py:158-183`).
 Two Spark-first shapes:
 
-1. ``fetch_to_dataframe`` — driver-side fetch → ``createDataFrame``:
-   correct for one small page per run (the reference's actual workload).
+1. ``fetch_records`` — driver-side fetch into schema-typed dicts, no
+   Spark job (``fetch_to_dataframe`` wraps it in ``createDataFrame``):
+   correct for a few pages per run (the reference's actual workload).
 2. ``PagedRestDataSource`` — a Spark 4 Python DataSource: pages become
    input partitions, so N pages fetch in parallel on executors and the
    result is a real scan node (filter/limit land above it, but
@@ -64,12 +65,36 @@ def fixture_fetcher(path: str = FIXTURE_PATH) -> Fetcher:
     for ``requests.get(<api>/coins/markets?page=N&per_page=K)``): the
     fixture is a flat array of records tagged with their ``page``, in
     the public CoinGecko `/coins/markets` field shape the reference
-    projects (`…optimized.py:161-168`)."""
+    projects (`…optimized.py:161-168`). The file is read once, when the
+    fetcher is made."""
+    by_page: dict[int, list[dict]] = {}
+    for r in _load_fixture(path):
+        by_page.setdefault(r.get("page"), []).append(r)
 
     def fetch(page: int, per_page: int) -> list[dict]:
-        return [r for r in _load_fixture(path) if r.get("page") == page][:per_page]
+        return by_page.get(page, [])[:per_page]
 
     return fetch
+
+
+def fetch_records(
+    fetcher: Fetcher = _default_fetcher,
+    pages: int = 1,
+    per_page: int = 100,
+    schema: T.StructType = COIN_MARKET_SCHEMA,
+) -> list[dict]:
+    """Driver-side paged extract (the reference's shape): each record
+    projected to ``schema``'s fields and type-checked against them the
+    way ``createDataFrame`` checks its input (a mistyped value raises
+    here, not in a later Spark job)."""
+    verify = T._make_type_verifier(schema)
+    records: list[dict] = []
+    for page in range(1, pages + 1):
+        for r in fetcher(page, per_page):
+            row = {f.name: r.get(f.name) for f in schema.fields}
+            verify(row)
+            records.append(row)
+    return records
 
 
 def fetch_to_dataframe(
@@ -79,12 +104,8 @@ def fetch_to_dataframe(
     per_page: int = 100,
     schema: T.StructType = COIN_MARKET_SCHEMA,
 ) -> DataFrame:
-    """Driver-side extract → DataFrame (the reference's shape)."""
-    records: list[dict] = []
-    for page in range(1, pages + 1):
-        records.extend(fetcher(page, per_page))
-    projected = [{f.name: r.get(f.name) for f in schema.fields} for r in records]
-    return spark.createDataFrame(projected, schema=schema)
+    """:func:`fetch_records` as a DataFrame."""
+    return spark.createDataFrame(fetch_records(fetcher, pages, per_page, schema), schema=schema)
 
 
 try:  # Spark 4 Python DataSource API

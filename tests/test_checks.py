@@ -43,6 +43,13 @@ def test_enforce_raises_with_failing_counts(spark, sf_dir):
         checks.enforce(orders, [checks.expect_between("o_totalprice", 0, 10)])
 
 
+def test_enforce_returns_row_count(spark, sf_dir):
+    orders = load_table(spark, sf_dir, "orders")
+    exps = [checks.expect_not_null("o_orderkey"), checks.expect_unique(["o_orderkey"])]
+    assert checks.enforce(orders, exps) == orders.count()
+    assert checks.enforce(orders.limit(0), exps) == 0  # empty: no failures, zero rows
+
+
 def test_expect_schema(spark, sf_dir):
     region = load_table(spark, sf_dir, "region")
     checks.expect_schema(region, {"r_regionkey": "int", "r_name": "string"})

@@ -61,6 +61,24 @@ def test_pipeline_end_to_end(spark, bronze, tmp_path):
     assert meta["row_count"] == 100 and meta["schema_version"] == "v1"
 
 
+def test_pipeline_reconciles_gold_read_back_with_write(spark, tmp_path, monkeypatch):
+    """The Gold read-back must hold the rows the write observed: a
+    read-back one row short fails the reconcile gate."""
+    from airflow_crypto_etl_spark.checks import CheckFailure
+    from airflow_crypto_etl_spark.sources import rest
+
+    records = rest.fetch_records(rest.fixture_fetcher(), pages=2)
+    read_layer = medallion.read_layer
+
+    def short_gold(spark, lake_root, layer, ds):
+        df = read_layer(spark, lake_root, layer, ds)
+        return df.filter("coin_id != 'bitcoin'") if layer == "gold" else df
+
+    monkeypatch.setattr(medallion, "read_layer", short_gold)
+    with pytest.raises(CheckFailure, match="count reconciliation failed: src=9 dst=10"):
+        medallion.run_pipeline(spark, records, str(tmp_path / "lake"), DS)
+
+
 def test_contract_enforcement_aborts_on_bad_rows(spark, bronze):
     import pyspark.sql.functions as F
     from py4j.protocol import Py4JJavaError

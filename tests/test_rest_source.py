@@ -77,3 +77,39 @@ def test_fixture_fetcher_pages(spark):
     p1, p2, p3 = fetch(1, 100), fetch(2, 100), fetch(3, 100)
     assert len(p1) == 5 and len(p2) == 5 and p3 == []
     assert fetch(1, 2) == p1[:2]  # per_page honored
+
+
+def test_fixture_fetcher_reads_file_once(monkeypatch):
+    import builtins
+
+    opened = []
+    real_open = builtins.open
+
+    def counting_open(file, *args, **kwargs):
+        if file == rest.FIXTURE_PATH:
+            opened.append(file)
+        return real_open(file, *args, **kwargs)
+
+    monkeypatch.setattr(builtins, "open", counting_open)
+    fetch = rest.fixture_fetcher()
+    pages = [fetch(p, 100) for p in range(1, 6)]
+    assert len(opened) == 1
+    assert [len(p) for p in pages] == [5, 5, 0, 0, 0]
+
+
+def test_extract_records_match_dataframe_rows(spark):
+    """The control plane's driver-side extract holds exactly the rows
+    (values and Python types) the DataFrame extract collects."""
+    from airflow_crypto_etl_spark.plans import control_plane as cp
+
+    ctx = {"spark": spark, "pages": 2}
+    cp.extract(ctx)
+    rows = [
+        r.asDict()
+        for r in rest.fetch_to_dataframe(spark, rest.fixture_fetcher(), pages=2).collect()
+    ]
+    assert len(ctx["records"]) == 10
+    assert ctx["records"] == rows
+    assert [[type(v) for v in r.values()] for r in ctx["records"]] == [
+        [type(v) for v in r.values()] for r in rows
+    ]
